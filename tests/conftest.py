@@ -27,7 +27,8 @@ def pytest_configure(config):
 
 
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get("ZG_RUN_SLOW"):
+    run_slow = os.environ.get("ZG_RUN_SLOW", "").strip().lower()
+    if config.getoption("--runslow") or run_slow in ("1", "true", "yes"):
         return
     skip = pytest.mark.skip(
         reason="slow sweep — enable with --runslow or ZG_RUN_SLOW=1"

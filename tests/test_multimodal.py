@@ -39,6 +39,13 @@ def test_extract_features(media):
     assert f0.n_frames == (f0.n_bytes + 255) // 256
 
 
+@pytest.mark.parametrize("n_bins", [0, 257, 1024])
+def test_extract_features_rejects_n_bins_outside_byte_range(media, n_bins):
+    # from 258 on the uint16 bucket math would wrap into wrong histograms
+    with pytest.raises(ValueError, match="n_bins"):
+        MM.extract_features(media, n_bins=n_bins)
+
+
 def test_resize_media(media):
     resized = MM.resize_media(media, width=16, height=8)
     # stage is schema-preserving (modulo nullability flags)

@@ -32,6 +32,7 @@ documented mode, the deterministic mode is the test/oracle profile.
 from __future__ import annotations
 
 from zg_etl_spark.operators import registries as R
+from zg_etl_spark.shared import shared
 
 DAY_MS = 86_400_000
 VALID_PAST_MS = 21 * DAY_MS  # configured subtime (reference ships 7d,
@@ -1120,49 +1121,28 @@ def full_query(d: Dialect, body: str) -> str:
     return prelude(d) + "\n" + body
 
 
-# --- Spark execution: per-session cached stage views -----------------------
-_ACTIVE: dict[int, str] = {}
-_CACHED: dict[int, list] = {}
-
-
+# --- Spark execution: the shared spine ------------------------------------
 def ensure_pipeline_views(spark, sf_dir: str) -> None:
-    """Register every stage as a temp view, caching the shared spine.
-    Re-registers (and drops old cache) when sf_dir changes."""
-    import os
+    """Register every stage as a temp view over ``sf_dir``. The spine is
+    one shared entry ("spine"): built once per sf_dir, rebuilt when
+    sf_dir changes."""
+    shared(spark, sf_dir, "spine", lambda: _build_spine(spark, sf_dir))
 
-    from zg_etl_spark.sources.tables import load_table
 
-    from zg_etl_spark.session import session_key
+def _build_spine(spark, sf_dir: str) -> None:
+    import re
+    from concurrent.futures import ThreadPoolExecutor
 
-    key = session_key(spark)
-    if _ACTIVE.get(key) == sf_dir:
-        return
-    for df in _CACHED.get(key, []):
-        df.unpersist()
-    _CACHED[key] = []
+    from pyspark import inheritable_thread_target
 
-    # events.ts is parquet TIMESTAMP(NANOS); read it as a nanos BIGINT
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events = load_table(spark, sf_dir, "events")
+    from zg_etl_spark.sources.tables import fan_out, load_table, table_path
+
     # the spine's first pass (feed -> gated) evaluates ~50 derived
-    # columns per row (md5, regexps, string builds) — far heavier per
-    # byte than a plain scan — and the testdata ships events as ONE
-    # parquet file, so without this the whole gated build runs in a
-    # single task (measured: gated checkpoint 2.9 s at 1 partition,
-    # 0.9 s at 8, 0.65 s at 32 in an interleaved A/B at sf0.1).
-    # Size-derived fan-out, same discipline as llm._register_docs_views
-    # but sized for EXPRESSION work rather than scan bytes (~64 KiB of
-    # source per task — still thousands of rows), capped at the core
-    # count, and a no-op when the native splits already parallelize
-    # (at 100 TB the source is many files and this never fires).
-    try:
-        ev_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        ev_bytes = 0
-    cores = spark.sparkContext.defaultParallelism
-    want = max(1, min(cores, -(-ev_bytes // (64 * 1024))))
-    if events.rdd.getNumPartitions() < want:
-        events = events.repartition(want)
+    # columns per row, far heavier per byte than a plain scan, so the
+    # events source fans out by size (sources.tables.fan_out) before the
+    # gated build instead of running it in one task per source file
+    events = load_table(spark, sf_dir, "events")
+    events = fan_out(spark, events, table_path(sf_dir, "events"))
     events.createOrReplaceTempView("events")
 
     # localCheckpoint truncates lineage: without it every downstream
@@ -1177,21 +1157,26 @@ def ensure_pipeline_views(spark, sf_dir: str) -> None:
     # did_ids / uid_ids; event_dict / attrs_melted) materialize
     # CONCURRENTLY — Spark schedules jobs from multiple driver threads
     # onto the same executor pool, exactly as independent registry builds
-    # would run on a cluster.
-    import re
-    from concurrent.futures import ThreadPoolExecutor
-
+    # would run on a cluster. Each pool task runs under its own copy of
+    # the caller's local properties (one inheritable_thread_target wrapper
+    # per task: threads running one wrapper share its copy, and every SQL
+    # execution writes its id there), so its jobs carry the job group of
+    # whoever asked for the spine.
     pending: list[tuple[str, object]] = []
+
+    def checkpoint(df):
+        return df.localCheckpoint(eager=True)
 
     def flush() -> None:
         if not pending:
             return
         with ThreadPoolExecutor(max_workers=len(pending)) as ex:
-            dfs = list(
-                ex.map(lambda nd: nd[1].localCheckpoint(eager=True), pending)
-            )
+            futures = [
+                ex.submit(inheritable_thread_target(spark)(checkpoint), df)
+                for _, df in pending
+            ]
+            dfs = [f.result() for f in futures]
         for (name, _), df in zip(pending, dfs):
-            _CACHED[key].append(df)
             df.createOrReplaceTempView(name)
         pending.clear()
 
@@ -1204,7 +1189,6 @@ def ensure_pipeline_views(spark, sf_dir: str) -> None:
         else:
             df.createOrReplaceTempView(name)
     flush()
-    _ACTIVE[key] = sf_dir
 
 
 def spark_pipeline_df(spark, sf_dir: str, body: str):

@@ -28,6 +28,8 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zg_etl_spark.shared import shared, shared_view
+
 QUERIES: dict = {}
 ORACLE: dict = {}
 
@@ -232,79 +234,32 @@ class DD:
         return f"regexp_replace({col}, '{pattern}', '{repl}', 'g')"
 
 
-# bytes of source per partition the downstream per-row pipelines want:
-# sized for EXPRESSION work (md5-per-shingle minhash, array folds),
-# not scan bytes — small enough that a single-file table parallelizes
-# the CPU-heavy lanes, large enough that task scheduling doesn't
-# dominate. Interleaved A/B at sf0.1 (594 KB documents): the minhash
-# build read 2.8/0.85/0.94 s at 2 partitions vs 0.52/0.45/0.45 at 8,
-# and even the cheap map-only lanes improved slightly; 32 ≈ 8. The
-# earlier 512 KiB value under-parallelized exactly the builds that
-# matter (r11's 32-tasks-hurt measurement was the FLAT repartition on
-# sub-MB tables, which the size-derived count already avoids).
-_DOCS_PART_TARGET = 64 * 1024
-_DOCS_MEMO: dict = {}
-
-
 def _register_docs_views(spark: SparkSession, sf_dir: str) -> None:
-    """documents/embeddings ship as ONE parquet file per table, which
-    would serialize every per-row array/hash pipeline into a single task;
-    a round-robin repartition of the raw rows (cheap — thousands of rows)
-    parallelizes all downstream CPU. The count is SIZE-DERIVED, capped at
-    the core count (guide §2: partition counts must adapt to input scale,
-    not be a constant tuned for one deployment): tiny tables get a few
-    partitions instead of one-per-core, and a corpus whose native parquet
-    splits already reach the desired count is left alone — at 100 TB the
-    source is many files and the repartition never fires."""
-    import math
-    import os
+    """Point `documents`/`embeddings` at ``sf_dir``. Each view is the
+    table fanned out by size (sources.tables.fan_out): the testdata ships
+    ONE parquet file per table, which would serialize every per-row
+    array/hash pipeline into a single task, and a round-robin repartition
+    of the raw rows (thousands) parallelizes all downstream CPU. The
+    fanned frame is shared per sf_dir; registering it again is
+    catalog-only, so every l-query calls this unconditionally — another
+    query may have re-pointed the views since."""
+    from zg_etl_spark.sources.tables import fan_out, load_table, table_path
 
-    from zg_etl_spark.session import session_key
-    from zg_etl_spark.sources.tables import load_table
-
-    skey = session_key(spark)
-    cores = spark.sparkContext.defaultParallelism
     for t in ("documents", "embeddings"):
-        memo_key = (skey, sf_dir, t)
-        df = load_table(spark, sf_dir, t)
-        n_part = _DOCS_MEMO.get(memo_key)
-        if n_part is None:
-            size = os.path.getsize(os.path.join(sf_dir, t + ".parquet"))
-            want = max(1, min(cores, math.ceil(size / _DOCS_PART_TARGET)))
-            # 0 = native splits already parallel enough, never repartition
-            n_part = want if df.rdd.getNumPartitions() < want else 0
-            _DOCS_MEMO[memo_key] = n_part
-        if n_part:
-            df = df.repartition(n_part)
-        df.createOrReplaceTempView(t)
+        shared(
+            spark, sf_dir, t,
+            lambda t=t: fan_out(
+                spark, load_table(spark, sf_dir, t), table_path(sf_dir, t)),
+        ).createOrReplaceTempView(t)
 
 
-# Shared derived datasets (shingle sets, minhash signatures) referenced by
-# several queries — and referenced MULTIPLE times inside one query via WITH
-# clauses. Spark substitutes cached plans BEFORE CTE inlining, so a
-# `.cache()`d temp view inside a WITH body silently recomputes its whole
-# lineage per reference (measured: l4's 4 references re-ran the shingle
-# pipeline 4×). localCheckpoint truncates the lineage instead, so every
-# reference — CTE or not — scans the materialized partitions. Memoized per
-# (session, sf_dir): the suite builds each derived set once, as a real
-# deployment would persist it as a table.
-_VIEW_MEMO: dict = {}
-
-
-def _shared_view(spark: SparkSession, sf_dir: str, name: str, sql: str) -> None:
-    from zg_etl_spark.session import session_key
-
-    key = session_key(spark)
-    sf_views = _VIEW_MEMO.setdefault(key, {})
-    # base views are re-registered unconditionally: another query may have
-    # re-pointed `documents`/`embeddings` at a different sf_dir since the
-    # memoized build (registration is catalog-only, no job)
+def _docs_view(spark: SparkSession, sf_dir: str, name: str, sql: str) -> None:
+    """Register the docs views, then the shared derived set ``name``
+    (shingle sets, minhash signatures, LSH/PQ indexes) built from
+    ``sql`` over them — referenced by several queries, and several times
+    inside one query via WITH clauses."""
     _register_docs_views(spark, sf_dir)
-    if sf_views.get(name) == sf_dir:
-        return
-    df = spark.sql(sql).localCheckpoint(eager=True)
-    df.createOrReplaceTempView(name)
-    sf_views[name] = sf_dir
+    shared_view(spark, sf_dir, name, lambda: spark.sql(sql))
 
 
 def _register(name: str, body_fn):
@@ -382,8 +337,8 @@ FROM documents dd LEFT JOIN best b ON b.doc_id = dd.doc_id"""
 
 def _l2_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `words` feeds both the per-lang profile build AND the per-doc scoring
-    # join — materialize it once (see _shared_view on CTE cache bypass)
-    _shared_view(
+    # join — materialize it once (see shared_view on CTE cache bypass)
+    _docs_view(
         spark,
         sf_dir,
         "l2_words",
@@ -466,7 +421,7 @@ LIMIT 100"""
 def _ensure_shingle_views(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
     """Materialize the hashed 4-gram shingle views shared by l4 and l25.
 
-    ONE definition site: _shared_view memoizes by name, so a second,
+    ONE definition site: shared views are keyed by name, so a second,
     textually-divergent copy would silently serve whichever ran first.
     Two-step build: materialize the per-doc shingle ARRAYS first, explode
     from the checkpoint. One-step builds push the Generate-inferred
@@ -476,7 +431,7 @@ def _ensure_shingle_views(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
     Returns the name of the exploded hashed-shingle view."""
     starts = LD.seq("1", f"{LD.alen('ws')} - {n - 1}")
     sh_arr = LD.lmap(starts, "i", LD.slice_join("ws", "i", n))
-    _shared_view(
+    _docs_view(
         spark,
         sf_dir,
         "l4_sharr",
@@ -484,7 +439,7 @@ def _ensure_shingle_views(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
             FROM (SELECT doc_id, {LD.split('text')} AS ws FROM documents) w
             WHERE {LD.alen('ws')} >= {n}""",
     )
-    _shared_view(
+    _docs_view(
         spark,
         sf_dir,
         "l4_shingles",
@@ -582,8 +537,8 @@ def _ensure_cands_view(spark: SparkSession, sf_dir: str) -> None:
     DISTINCT before (and l16's symmetric-edge union executed it TWICE
     in one action). On a cluster this is the persisted candidate table
     every dedup pipeline keeps next to its signature index."""
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(LD))
-    _shared_view(spark, sf_dir, "l6_cands", _l6(LD))
+    _docs_view(spark, sf_dir, "mh_sigs", _l5(LD))
+    _docs_view(spark, sf_dir, "l6_cands", _l6(LD))
 
 
 def _l6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,7 +708,7 @@ def _l9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side); inlined CTEs recompute it per reference (15 Exchanges). The
     # materialized view computes it once — exactly an IVF index build: on
     # a cluster this IS the persisted index table.
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
+    _docs_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
     return spark.sql("WITH " + _l9_inner(LD, "l9_assign"))
 
 
@@ -831,7 +786,7 @@ def _l11_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a cluster, same discipline as l9_assign/mh_sigs. Interleaved
     # A/B at sf0.1: inline 0.69/0.54/0.56 s -> view 0.22/0.18/0.19
     # warm, 0.47/0.42/0.39 including the view build.
-    _shared_view(spark, sf_dir, "l11_vecs", _l11_vecs_sql(LD))
+    _docs_view(spark, sf_dir, "l11_vecs", _l11_vecs_sql(LD))
     return spark.sql(_l11_pairs(LD, "l11_vecs"))
 
 
@@ -1125,7 +1080,7 @@ SELECT doc_id, word, tf, df, score, rank FROM (
 def _l19_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf feeds both df and the scoring join — materialize once (Spark
     # inlines CTEs, which would re-run the word explode + groupBy twice)
-    _shared_view(
+    _docs_view(
         spark,
         sf_dir,
         "l19_tf",
@@ -1231,27 +1186,6 @@ GROUP BY lang, rate_pct"""
 
 
 _register("l22_stratified_sample", _l22)
-
-
-def release_derived_views(spark: SparkSession) -> None:
-    """Drop this session's memoized derived-set views so their
-    checkpointed blocks can be reclaimed. Long-lived sessions that sweep
-    many scale factors (or run the full suite repeatedly) otherwise keep
-    localCheckpoint blocks for the whole session lifetime — measured as
-    late-suite slowdown in BASELINE.md.
-
-    localCheckpoint blocks bypass the CacheManager, so there is no
-    direct unpersist: dropping the temp views releases the last plan
-    references and Spark's ContextCleaner unpersists the orphaned RDDs
-    after a JVM GC (nudged here). A cluster deployment persists these
-    sets as tables and DROPs them instead."""
-    from zg_etl_spark.session import session_key
-
-    key = session_key(spark)
-    names = _VIEW_MEMO.pop(key, {})
-    for name in names:
-        spark.catalog.dropTempView(name)
-    spark.sparkContext._jvm.System.gc()
 
 
 # ---------------------------------------------------------------------------
@@ -1408,23 +1342,17 @@ _register("l26_repetition_filter", _l26)
 # L27 dedup keep-list: the step after l16's connected components — keep
 # the canonical (min-doc-id) survivor of every near-dup group, drop the
 # rest, and report per-source retention. Reuses l16's propagation result
-# (memoized per session+SF: the groups relation is checkpointed once and
-# shared, so the bench pays the iterative join a single time).
+# (a shared entry: the groups relation is checkpointed once per sf_dir,
+# so the bench pays the iterative join a single time).
 # ---------------------------------------------------------------------------
-_l16_memo: dict = {}
-
-
 def _l16_groups(spark: SparkSession, sf_dir: str):
-    from zg_etl_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _l16_memo:
-        _l16_memo[key] = _l16_run(spark, sf_dir).localCheckpoint(eager=True)
-    return _l16_memo[key]
+    return shared(
+        spark, sf_dir, "l16_groups",
+        lambda: _l16_run(spark, sf_dir).localCheckpoint(eager=True))
 
 
-# l16 itself serves from the same memo — the iterative propagation runs
-# once per (session, SF) no matter how many consumers ask
+# l16 itself serves from the same entry — the iterative propagation runs
+# once per (session, sf_dir) no matter how many consumers ask
 QUERIES["l16_dedup_groups"] = _l16_groups
 
 
@@ -1581,8 +1509,8 @@ def _l29_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantization shared with l9 (if l9 ran first, the coarse step is
     # free); the vector-carrying index view is materialized once more on
     # top and referenced three times (both pair sides + the verdict).
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
-    _shared_view(spark, sf_dir, "l29_index", _l29_index_sql("l9_assign"))
+    _docs_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
+    _docs_view(spark, sf_dir, "l29_index", _l29_index_sql("l9_assign"))
     return spark.sql("WITH " + _l29_inner(LD, "l29_index"))
 
 
@@ -1656,7 +1584,7 @@ def _l30_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, exact because starts is 1..n-k+1), keeping the whole query
     # at ONE corpus scan. On a cluster this view is the persisted span
     # index a dedup sweep would build anyway.
-    _shared_view(spark, sf_dir, "l30_win", _l30_win_sql(LD))
+    _docs_view(spark, sf_dir, "l30_win", _l30_win_sql(LD))
     return spark.sql("WITH " + _l30_inner(LD, "l30_win"))
 
 
@@ -1814,7 +1742,7 @@ FROM scored"""
 
 
 def _l33_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "l33_bg", _l33_bg_sql(LD))
+    _docs_view(spark, sf_dir, "l33_bg", _l33_bg_sql(LD))
     return spark.sql("WITH " + _l33_inner(LD, "l33_bg"))
 
 
@@ -1864,7 +1792,7 @@ def _l34_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus — it materializes once on top of the memoized shingle view,
     # so the whole query pays a single documents scan at build time
     sh = _ensure_shingle_views(spark, sf_dir)
-    _shared_view(spark, sf_dir, "l34_src_sh", _l34_src_sh_sql(sh))
+    _docs_view(spark, sf_dir, "l34_src_sh", _l34_src_sh_sql(sh))
     return spark.sql(f"WITH {_l34_inner(LD, 'l34_src_sh')}")
 
 
@@ -1915,7 +1843,7 @@ WHERE d.doc_id % 10 = 0"""
 
 
 def _l35_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(LD))
+    _docs_view(spark, sf_dir, "mh_sigs", _l5(LD))
     return spark.sql(f"WITH {_l6_ctes(LD)}, {_l35_inner(LD)}")
 
 
@@ -2071,7 +1999,7 @@ def _l37_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deployment persists) is the expensive CTE and feeds the ADC join;
     # inlined it recomputes the codebook rank per reference/run. One
     # memoized build, same discipline as l9_assign/l6_cands/l11_vecs.
-    _shared_view(
+    _docs_view(
         spark, sf_dir, "l37_enc",
         f"WITH {_l37_ctes(LD)} SELECT * FROM enc",
     )

@@ -24,8 +24,10 @@ from zg_etl_spark.operators.domain import (
     SPARK,
     Dialect,
     duck_pipeline_sql,
+    ensure_pipeline_views,
     spark_pipeline_df,
 )
+from zg_etl_spark.shared import shared, shared_view
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -1022,30 +1024,27 @@ GROUP BY o.o_orderpriority"""
     return joined, cleanup
 
 
-# the bucketed layout is written ONCE per (session, sf_dir) and queried
-# many times — exactly a deployment's pre-bucketed table lifecycle; only
-# the first w2 run pays the build (tables dropped at process exit)
-_W2_MEMO: dict = {}
-
-
+# the bucketed layout is written ONCE per sf_dir (a shared entry) and
+# queried many times — exactly a deployment's pre-bucketed table
+# lifecycle; only the first w2 run pays the build (tables dropped at
+# process exit)
 def _w2_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import atexit
     import uuid as _uuid
 
-    from zg_etl_spark.session import session_key
+    def build():
+        joined, cleanup = w2_joined(spark, sf_dir, _uuid.uuid4().hex[:8])
+        atexit.register(cleanup)
+        return joined
 
     # no broadcast: the point is the co-located big-big join path
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        key = (session_key(spark), sf_dir)
-        if key not in _W2_MEMO:
-            joined, cleanup = w2_joined(spark, sf_dir, _uuid.uuid4().hex[:8])
-            atexit.register(cleanup)
-            _W2_MEMO[key] = joined
         # the join itself re-executes per call (that is the measured
         # work); only the bucketed-table build is amortized
-        return _W2_MEMO[key].localCheckpoint(eager=True)
+        joined = shared(spark, sf_dir, "w2_bucketed", build)
+        return joined.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
@@ -1978,21 +1977,12 @@ FROM (
 GROUP BY match_tier, lid"""
 
 
-_P42_VIEW_MEMO: dict = {}
-
-
 def _p42_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the UA-parsed keyed slice once per (session, sf_dir) —
-    the _shared_view discipline — then run the body against the view."""
-    from zg_etl_spark.operators.domain import ensure_pipeline_views
-    from zg_etl_spark.session import session_key
-
+    """Materialize the UA-parsed keyed slice as a shared view, then run
+    the body against the view."""
     ensure_pipeline_views(spark, sf_dir)
-    key = session_key(spark)
-    if _P42_VIEW_MEMO.get(key) != sf_dir:
-        df = spark.sql(_p42_keyed_sql(SPARK)).localCheckpoint(eager=True)
-        df.createOrReplaceTempView("p42_keyed")
-        _P42_VIEW_MEMO[key] = sf_dir
+    shared_view(spark, sf_dir, "p42_keyed",
+                lambda: spark.sql(_p42_keyed_sql(SPARK)))
     return spark.sql("WITH " + _p42_body(SPARK, "p42_keyed"))
 
 
@@ -3989,23 +3979,17 @@ FROM (
 GROUP BY match_tier, lid"""
 
 
-_P52_VIEW_MEMO: dict = {}
+def p52_keyed_view(spark: SparkSession, sf_dir: str) -> None:
+    """Register the UA-parsed keyed slice as shared view `p52_keyed`:
+    p52's snapshot and p54's replay (plans/consume.py) both read this one
+    build instead of each parsing it."""
+    ensure_pipeline_views(spark, sf_dir)
+    shared_view(spark, sf_dir, "p52_keyed",
+                lambda: spark.sql(p52_keyed_sql(SPARK)))
 
 
 def _p52_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the UA-parsed keyed slice once per (session, sf_dir)
-    (the _shared_view discipline; p54's consume-side build keeps its own
-    independent memo of the same SQL — no lifecycle coupling), then run
-    the snapshot body against the view."""
-    from zg_etl_spark.operators.domain import ensure_pipeline_views
-    from zg_etl_spark.session import session_key
-
-    ensure_pipeline_views(spark, sf_dir)
-    key = session_key(spark)
-    if _P52_VIEW_MEMO.get(key) != sf_dir:
-        df = spark.sql(p52_keyed_sql(SPARK)).localCheckpoint(eager=True)
-        df.createOrReplaceTempView("p52_keyed")
-        _P52_VIEW_MEMO[key] = sf_dir
+    p52_keyed_view(spark, sf_dir)
     return spark.sql(_p52(SPARK, keyed_src="p52_keyed"))
 
 

@@ -53,12 +53,61 @@ def ensure_session_confs(spark: SparkSession) -> None:
         )
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _normalize_events_ts(df)
     return df
+
+
+# Bytes of source per task when a table fans out (fan_out). Sized for
+# EXPRESSION work, not scan bytes: the spine's gated build evaluates ~50
+# derived columns per event row (md5, regexps, string builds) and the
+# docs lanes run md5-per-shingle minhash and array folds, so 64 KiB is
+# still thousands of rows per task. Interleaved A/Bs at sf0.1: the gated
+# checkpoint took 2.9 s at 1 partition, 0.9 s at 8, 0.65 s at 32; the
+# minhash build 2.8/0.85/0.94 s at 2 partitions vs 0.52/0.45/0.45 at 8.
+# A 512 KiB target under-parallelized exactly those builds.
+FAN_OUT_BYTES = 64 * 1024
+
+
+def input_bytes(path: str) -> int:
+    """Bytes of a table on disk: the file's size or, when ``path`` is a
+    directory (the multi-file parquet layout), the sum of its data files,
+    skipping the ``_``/``.``-prefixed metadata files Spark's reader skips.
+    ``os.path.getsize`` on the directory itself returns its inode size
+    (~4 KB) whatever the table holds. 0 when ``path`` is missing."""
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        total = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+        return total
+    except OSError:
+        return 0
+
+
+def fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Round-robin ``df`` (read from ``path``) over one partition per
+    FAN_OUT_BYTES of source, capped at the core count, when its native
+    splits are fewer. The testdata ships each table as ONE parquet file,
+    which would run every per-row pipeline downstream in a single task;
+    a source that already arrives as many files (any cluster-scale
+    layout) is left alone."""
+    cores = spark.sparkContext.defaultParallelism
+    want = max(1, min(cores, -(-input_bytes(path) // FAN_OUT_BYTES)))
+    return df.repartition(want) if df.rdd.getNumPartitions() < want else df
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
