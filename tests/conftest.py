@@ -38,6 +38,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def _suite_heap_gb() -> int:
+    """28 GB of heap where the host can hold it, else MemTotal less 8 GB
+    (at least 2) for everything outside the heap: metaspace and code
+    cache, the Python workers, pytest and DuckDB. A heap larger than
+    physical memory is not headroom: the kernel OOM-kills the JVM partway
+    through the suite once G1 grows into it."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return min(28, max(2, kb // 2**20 - 8))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from zg_etl_spark.session import get_spark
@@ -48,8 +60,8 @@ def spark():
     # OOM in-suite while passing standalone (round 10: seed-10 trees
     # pushed test_date_compositions over at 16g). The bench default
     # stays 16g — that G1 tradeoff was measured (session.py) — only
-    # the suite session gets headroom.
-    os.environ.setdefault("SPARK_DRIVER_MEM", "28g")
+    # the suite session gets headroom, capped by the host's memory.
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{_suite_heap_gb()}g")
     s = get_spark("zg-etl-tests", cpus=8)
     yield s
 

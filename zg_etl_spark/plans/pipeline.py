@@ -460,6 +460,33 @@ def _p8(d: Dialect) -> str:
         "net, cr, ua, url, ref, cn, vn, ip_long, ip, utm_source, dur, "
         "business, event_type, k, pl, value, utm_campaign, utm_content"
     )
+    src = f"""(
+  SELECT {cols}, owner_e, event_name_t, zg_eid,
+         {SK.engine_case(d, 'ref')} AS search_engine,
+         {term_raw} AS term_raw,
+         {ua_real_case(d)} AS ua_real
+  FROM events_dicted WHERE event_error_code = 0
+  UNION ALL
+  SELECT {cols}, owner AS owner_e,
+         CAST(NULL AS {d.strtype}) AS event_name_t,
+         CAST(CASE dt WHEN 'ss' THEN -1 ELSE -2 END AS BIGINT) AS zg_eid,
+         {SK.engine_case(d, 'ref')} AS search_engine,
+         {term_raw} AS term_raw,
+         {ua_real_case(d)} AS ua_real
+  FROM resolved WHERE dt IN ('ss', 'se')
+) e"""
+    utm_term = d.clean(term_full, 256)
+    if d.name == "spark":
+        # term_full inlines utm_term_fallback's URI parse, and clean()
+        # names its argument four times: inline, that is one expression
+        # tree of ~15k generated Java lines, past the JVM's 64 KB method
+        # limit, so the stage would fail to compile and fall back to the
+        # slow path on every materialization. As a column of its own
+        # layer it is evaluated once per row and generated once;
+        # CollapseProject keeps the layer because clean() reads the
+        # column more than once. DuckDB keeps the inline form.
+        src = f"(SELECT e.*, {term_full} AS term_full FROM {src}) e"
+        utm_term = d.clean("e.term_full", 256)
     return f"""
 SELECT /*+ BROADCAST(am), BROADCAST(g) */
        e.event_id, e.app_id, e.zg_id, e.zg_did, e.zg_uid,
@@ -501,7 +528,7 @@ SELECT /*+ BROADCAST(am), BROADCAST(g) */
             WHEN e.ref IS NOT NULL THEN '引荐' END AS utm_medium,
        {d.clean(f"COALESCE(e.utm_source, CASE WHEN e.ref IS NOT NULL THEN {website} END)", 256)}
            AS utm_source_f,
-       {d.clean(term_full, 256)} AS utm_term,
+       {utm_term} AS utm_term,
        {d.clean('e.utm_campaign', 256)} AS utm_campaign,
        {d.clean('e.utm_content', 256)} AS utm_content,
        CASE WHEN e.dur BETWEEN 0 AND 86400000 THEN e.dur
@@ -512,21 +539,7 @@ SELECT /*+ BROADCAST(am), BROADCAST(g) */
        CAST(NULL AS {d.strtype}) AS attr4,
        {d.s('e.zg_id')} || '_' || {d.s('COALESCE(e.sid, -1)')} AS attr5,
        {_cus_cols(d)}
-FROM (
-  SELECT {cols}, owner_e, event_name_t, zg_eid,
-         {SK.engine_case(d, 'ref')} AS search_engine,
-         {term_raw} AS term_raw,
-         {ua_real_case(d)} AS ua_real
-  FROM events_dicted WHERE event_error_code = 0
-  UNION ALL
-  SELECT {cols}, owner AS owner_e,
-         CAST(NULL AS {d.strtype}) AS event_name_t,
-         CAST(CASE dt WHEN 'ss' THEN -1 ELSE -2 END AS BIGINT) AS zg_eid,
-         {SK.engine_case(d, 'ref')} AS search_engine,
-         {term_raw} AS term_raw,
-         {ua_real_case(d)} AS ua_real
-  FROM resolved WHERE dt IN ('ss', 'se')
-) e
+FROM {src}
 LEFT JOIN attr_map am ON am.zg_eid = e.zg_eid AND am.owner = e.owner_e
 LEFT JOIN ip_ranges g ON e.ip_long BETWEEN g.ip_lo AND g.ip_hi"""
 
