@@ -45,7 +45,7 @@ def test_sessionize_gap_semantics(spark, src, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
     rows = spark.sql("SELECT * FROM sessions_test").collect()
 
     closed = {(r.app_id, r.zg_did, r.session_start): r

@@ -154,7 +154,7 @@ def test_identity_stream_end_to_end(spark, batches, tmp_path):
         output_path=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
 
     out = spark.read.option("basePath", str(tmp_path / "out")).parquet(
         str(tmp_path / "out")
@@ -175,7 +175,7 @@ def test_event_counts_watermark_stream(spark, batches, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt2"),
         query_name="evt_counts_test",
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
     out = spark.sql(
         "SELECT win.start, app_id, event_type, count FROM evt_counts_test"
     ).collect()
@@ -229,7 +229,7 @@ def test_zgid_stream_binding_rules(spark, tmp_path):
         bind_store_path=str(tmp_path / "bind"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
     out = {r.did: r for r in zgid_result(dev, uid, bind).collect()}
 
     assert out["dA"].bound_cuid == "u2"          # re-pointed on first login...

@@ -51,7 +51,7 @@ def _run_identity(spark, src, tmp_path):
         output_path=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
     return q
 
 
@@ -311,7 +311,7 @@ def test_upsert_sink_replay_is_idempotent(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "stream did not finish"
 
     _run()
     pre = {

@@ -2301,22 +2301,21 @@ FROM gate_ok GROUP BY {DUCK.idiv('ct', '86400000')}""")
 # The read-back must equal the single-shot p10 dedup minus the deleted
 # slice plus the resurrected subset — pure relational oracle, row-identity.
 # ---------------------------------------------------------------------------
-def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
+def delete_sign_batches(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DataFrame], DataFrame, int]:
+    """W6/s8's first two upsert batches: the b_user rows (``_ds`` false)
+    split at the median seq, the second half carrying delete markers
+    (newest seq) for every zg_id % 7 = 0 key. Also returns the live rows
+    and the max seq, from which W6 derives its resurrecting batch."""
     from pyspark.sql import functions as F
-
-    from zg_etl_spark.sinks import upsert_table
 
     base = spark_pipeline_df(
         spark, sf_dir, b_user_rows_sql(SPARK)
-    ).localCheckpoint(eager=True)  # three batches + markers reuse the spine scan
+    ).localCheckpoint(eager=True)  # every batch + the markers reuse the spine scan
     stats = base.selectExpr(
         "percentile_approx(seq, 0.5) AS m", "max(seq) AS mx"
     ).first()
-    mid, maxseq = stats.m, stats.mx
     live = base.withColumn("_ds", F.lit(False))
     dels = (
         base.filter(F.col("zg_id") % 7 == 0)
@@ -2327,10 +2326,27 @@ def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(NULL AS BIGINT) AS user_id",
             "CAST(NULL AS BIGINT) AS begin_date",
             "CAST(NULL AS INT) AS platform",
-            f"CAST({maxseq} + 1 AS BIGINT) AS seq",
+            f"CAST({stats.mx} + 1 AS BIGINT) AS seq",
             "TRUE AS _ds",
         )
     )
+    batches = [
+        live.filter(F.col("seq") <= stats.m),
+        live.filter(F.col("seq") > stats.m).unionByName(dels),
+    ]
+    return batches, live, stats.mx
+
+
+def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from zg_etl_spark.sinks import upsert_table
+
+    batches, live, maxseq = delete_sign_batches(spark, sf_dir)
     # resurrect: the key's ORIGINAL rows re-sent newer than the delete —
     # +const preserves the per-key ordering, so keep-latest lands on the
     # same winner p10 picks
@@ -2341,11 +2357,7 @@ def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="zg_w6_")
     path = os.path.join(work, "b_user_ds")
     try:
-        for batch in (
-            live.filter(F.col("seq") <= mid),
-            live.filter(F.col("seq") > mid).unionByName(dels),
-            reins,
-        ):
+        for batch in (*batches, reins):
             upsert_table(
                 spark, batch, path,
                 keys=["app_id", "device_id", "zg_id"], order_col="seq",

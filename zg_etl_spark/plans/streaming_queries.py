@@ -7,10 +7,15 @@ order per app — proven equivalent in tests/test_streaming.py). That lets a
 REAL Structured Streaming run be checked against a plain SQL oracle: the
 stream's merged mapping table must equal the batch `did_ids` stage.
 
-s1 runs readStream (file source, maxFilesPerTrigger=1, availableNow) over
-gate-ok events split into two seq-ordered files → foreachBatch incremental
-identity → the final mapping store, and the DuckDB oracle is just
+s1 replays gate-ok events split into two seq-ordered files (one file per
+micro-batch, availableNow) → foreachBatch incremental identity → the
+final mapping store, and the DuckDB oracle is just
 `SELECT app_id, did, zg_did FROM did_ids`.
+
+Every s-query is a source (``_source``: part frames written once per
+sf_dir) plus one bounded replay (``_replay``: work dir, state-shard
+count, await, materialize, cleanup) — the one place a run's lifecycle,
+and anything recorded per micro-batch, lives.
 """
 
 from __future__ import annotations
@@ -20,6 +25,8 @@ import glob
 import os
 import shutil
 import tempfile
+import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,21 +37,25 @@ from zg_etl_spark.operators.domain import (
 )
 from zg_etl_spark.shared import shared
 from zg_etl_spark.sources.tables import input_bytes
+from zg_etl_spark.streaming.engine import replay_source, start_replay
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 
 
-def _write_split_files(parts: list[DataFrame], src_dir: str) -> None:
+def _write_split_files(
+    spark: SparkSession, parts: list[DataFrame], src_dir: str
+) -> None:
     """Write each part as ONE plain parquet file ``b{i}.parquet`` with
     strictly increasing mtimes so the file stream source (which orders
     by modification time) replays them in part order. The single-task
     part-writes are independent — they run as concurrent jobs instead
-    of back-to-back."""
+    of back-to-back, each under the caller's job group."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def write_one(i_and_df) -> None:
-        i, part_df = i_and_df
+    from pyspark import inheritable_thread_target
+
+    def write_one(i: int, part_df: DataFrame) -> None:
         stage = os.path.join(src_dir, f"_stage{i}")
         part_df.coalesce(1).write.parquet(stage)
         part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
@@ -53,8 +64,15 @@ def _write_split_files(parts: list[DataFrame], src_dir: str) -> None:
         os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
         shutil.rmtree(stage)
 
+    # one wrapper per task: each write gets its own copy of the caller's
+    # local properties (see ensure_pipeline_views' checkpoint pool)
     with ThreadPoolExecutor(max_workers=max(len(parts), 1)) as ex:
-        list(ex.map(write_one, enumerate(parts)))
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(write_one), i, part_df)
+            for i, part_df in enumerate(parts)
+        ]
+        for f in futures:
+            f.result()
 
 
 def _await_done(q, timeout_s: int = 300) -> None:
@@ -66,20 +84,37 @@ def _await_done(q, timeout_s: int = 300) -> None:
         raise RuntimeError(f"streaming query did not finish in {timeout_s}s")
 
 
-def _write_seq_ordered_files(df: DataFrame, src_dir: str) -> None:
-    """Split into two seq-ordered files (b0 < b1 by seq)."""
+def _seq_halves(df: DataFrame) -> list[DataFrame]:
+    """Two seq-ordered parts (b0 < b1 by seq), cut at the median seq."""
     mid = df.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
-    _write_split_files([df.filter(df.seq <= mid), df.filter(df.seq > mid)], src_dir)
+    return [df.filter(df.seq <= mid), df.filter(df.seq > mid)]
 
 
-# Each s-query streams a projection of the same spine; the seq-split
-# source files are deterministic per sf_dir, so each source is a shared
-# entry: written once and reused across queries/reruns (dirs removed at
-# process exit — a deployment's source topic persists the same way).
+# Each s-query replays source files that are deterministic per sf_dir, so
+# each source is a shared entry: written once and reused across
+# queries/reruns (dirs removed at process exit — a deployment's source
+# topic persists the same way).
 def _src_dir(prefix: str) -> str:
     src = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, src, ignore_errors=True)
     return src
+
+
+def _source(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    parts: Callable[[], list[DataFrame]],
+) -> str:
+    """The replay source ``name``: the frames ``parts()`` returns, in
+    replay order, one file (= one micro-batch) each."""
+
+    def build() -> str:
+        src = _src_dir(f"zg_{name}_")
+        _write_split_files(spark, parts(), src)
+        return src
+
+    return shared(spark, sf_dir, name, build)
 
 
 # One state shard per this many bytes of stream-source input. Every
@@ -98,6 +133,56 @@ def _stream_shards(spark: SparkSession, src: str) -> str:
     cap = spark.sparkContext.defaultParallelism
     return str(max(2, min(input_bytes(src) // _STATE_SHARD_BYTES + 1, cap)))
 
+
+class _Run(NamedTuple):
+    """One replay's scratch space: files under ``work``, and ``view``, the
+    name a memory sink registers its rows under."""
+
+    work: str
+    view: str
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.work, name)
+
+
+def _replay(
+    spark: SparkSession,
+    src: str,
+    tag: str,
+    start: Callable[[_Run], object],
+    read: Callable[[_Run], DataFrame],
+) -> DataFrame:
+    """Run one bounded replay of ``src`` and return its result, detached
+    from the work dir by localCheckpoint.
+
+    ``start(run)`` starts the stream — checkpoint and stores under
+    ``run.path(...)``, a memory sink named ``run.view`` — and returns the
+    query; ``read(run)`` builds the result from what the stream wrote.
+
+    The state-store partition count is frozen from shuffle.partitions at
+    query start, and per-shard store commits dominate at this volume, so
+    the stream runs with ``_stream_shards`` shards (a real deployment
+    sizes this to active-entity count / executor count). The session
+    value is restored BEFORE the result materializes, so result-side
+    shuffles (s2's keep-latest, s10's aggregate) keep it. The work dir
+    and the memory-sink view (it holds every emitted row on the driver)
+    go on success and on failure."""
+    run = _Run(
+        tempfile.mkdtemp(prefix=f"zg_{tag}_"), f"{tag}_mem_{uuid.uuid4().hex[:8]}"
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
+        try:
+            _await_done(start(run))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return read(run).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(run.view)
+        shutil.rmtree(run.work, ignore_errors=True)
+
+
 # One SUPERSET source serves every per-projection s-query: `resolved` is
 # row-for-row gate_ok (inner joins against mappings built FROM gate_ok),
 # and a parquet file stream read with a SUBSET schema prunes columns at
@@ -111,54 +196,37 @@ _SUPERSET_SQL = (
 )
 
 
-def _seq_ordered_source(
-    spark: SparkSession, sf_dir: str, name: str, sql: str
-) -> str:
-    def build() -> str:
-        src = _src_dir(f"zg_{name}_")
-        _write_seq_ordered_files(spark_pipeline_df(spark, sf_dir, sql), src)
-        return src
-
-    return shared(spark, sf_dir, name, build)
+def _stream_src(spark: SparkSession, sf_dir: str) -> str:
+    return _source(
+        spark, sf_dir, "stream_src",
+        lambda: _seq_halves(spark_pipeline_df(spark, sf_dir, _SUPERSET_SQL)),
+    )
 
 
 def _s1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.streaming.engine import start_identity_stream
+    from zg_etl_spark.streaming.engine import MappingStore, start_identity_stream
 
-    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_stream_")
-
+    src = _stream_src(spark, sf_dir)
     # the per-batch shuffles here touch only distinct NEW devices (the
     # event-side joins are broadcast) — a handful of shards beats paying
     # 32-task scheduling overhead per micro-batch job on tiny state
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_identity_stream(
+    return _replay(
+        spark, src, "s1",
+        lambda run: start_identity_stream(
             spark,
             source_dir=src,
             schema="event_id BIGINT, app_id BIGINT, did STRING, ct BIGINT, seq BIGINT",
-            store_path=os.path.join(work, "store"),
-            output_path=os.path.join(work, "out"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # the merged mapping store IS the result; localCheckpoint detaches it
-    # from the temp dir before cleanup
-    from zg_etl_spark.streaming.engine import MappingStore
-
-    result = (
-        MappingStore(
-            spark, os.path.join(work, "store"), key_col="did", id_col="zg_did"
+            store_path=run.path("store"),
+            output_path=run.path("out"),
+            checkpoint_dir=run.path("ckpt"),
+        ),
+        # the merged mapping store IS the result
+        lambda run: MappingStore(
+            spark, run.path("store"), key_col="did", id_col="zg_did"
         )
         .read()
-        .select("app_id", "did", "zg_did")
-        .localCheckpoint(eager=True)
+        .select("app_id", "did", "zg_did"),
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 QUERIES["s1_streaming_identity"] = _s1
@@ -206,51 +274,37 @@ def _s2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.sinks import keep_latest
     from zg_etl_spark.streaming.sessions import sessionize
 
-    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s2_")
-    store = os.path.join(work, "session_store")
+    src = _stream_src(spark, sf_dir)
 
-    stream = (
-        spark.readStream.schema("app_id BIGINT, zg_did BIGINT, ct BIGINT, seq BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    def start(run: _Run):
+        store = run.path("session_store")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # O(changed-sessions) append per batch — never a store rewrite
-        batch_df.withColumn("_b", F.lit(batch_id)).write.mode("append").parquet(store)
+        def _sink(batch_df: DataFrame, batch_id: int) -> None:
+            # O(changed-sessions) append per batch — never a store rewrite
+            batch_df.withColumn("_b", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(store)
 
-    # the state-store partition count is frozen from shuffle.partitions at
-    # query start; per-partition store commit cost dominates at this volume,
-    # so the stateful query runs with a handful of state shards (a real
-    # deployment sizes this to active-entity count / executor count)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
+        stream = replay_source(
+            spark, "app_id BIGINT, zg_did BIGINT, ct BIGINT, seq BIGINT", src
+        )
+        return start_replay(
             sessionize(stream, gap_ms=_SESSION_GAP_MS)
             .writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .foreachBatch(_sink),
+            run.path("ckpt"),
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
     # final state per session = the latest batch's emission (sessions only
     # grow, so last write wins) — UNIQUE-KEY read-time merge
-    result = (
-        keep_latest(
-            spark.read.parquet(store),
+    return _replay(
+        spark, src, "s2", start,
+        lambda run: keep_latest(
+            spark.read.parquet(run.path("session_store")),
             ["app_id", "zg_did", "session_start"],
             "_b",
-        )
-        .select("app_id", "zg_did", "session_start", "session_end", "n_events")
-        .localCheckpoint(eager=True)
+        ).select("app_id", "zg_did", "session_start", "session_end", "n_events"),
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 QUERIES["s2_streaming_sessions"] = _s2
@@ -269,48 +323,31 @@ _S3_DELAY_MS = 7_200_000       # 2 hour watermark delay
 
 
 def _s3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from zg_etl_spark.streaming.engine import start_event_counts_stream
 
-    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s3_")
-
-    name = "s3_mem_" + _uuid.uuid4().hex[:8]
+    src = _stream_src(spark, sf_dir)
     # windowed-agg state is (windows × apps × event types) — a few
-    # thousand rows; 8 state shards, not 32 (same sizing rule as s1/s2)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_event_counts_stream(
+    # thousand rows; a handful of state shards (same rule as s1/s2)
+    return _replay(
+        spark, src, "s3",
+        lambda run: start_event_counts_stream(
             spark,
             source_dir=src,
             schema="app_id BIGINT, event_type STRING, ct BIGINT, seq BIGINT",
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            query_name=name,
+            checkpoint_dir=run.path("ckpt"),
+            query_name=run.view,
             window_duration="1 hour",
             watermark_delay="2 hours",
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.table(name)
-        .select(
+        ),
+        lambda run: spark.table(run.view).select(
             (F.unix_millis(F.col("win.start"))).alias("win_start"),
             "app_id",
             "event_type",
             F.col("count").alias("n"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    # the memory sink holds every emitted row on the driver until the
-    # table is dropped; the checkpointed result no longer needs it
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 QUERIES["s3_streaming_counts"] = _s3
@@ -336,13 +373,10 @@ HAVING win_start + {_S3_WINDOW_MS} <= max_ct - {_S3_DELAY_MS}""")
 def _s4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_route_stream
 
-    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s4_")
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_route_stream(
+    src = _stream_src(spark, sf_dir)
+    return _replay(
+        spark, src, "s4",
+        lambda run: start_route_stream(
             spark,
             source_dir=src,
             schema=(
@@ -350,24 +384,16 @@ def _s4(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "owner STRING, event_name STRING, event_type STRING, "
                 "k BIGINT, value DOUBLE, pl STRING, ct BIGINT, seq BIGINT"
             ),
-            dev_store_path=os.path.join(work, "dev_store"),
-            event_store_path=os.path.join(work, "ev_store"),
-            output_path=os.path.join(work, "out"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(os.path.join(work, "out"))
-        .select(
+            dev_store_path=run.path("dev_store"),
+            event_store_path=run.path("ev_store"),
+            output_path=run.path("out"),
+            checkpoint_dir=run.path("ckpt"),
+        ),
+        lambda run: spark.read.parquet(run.path("out")).select(
             "event_id", "app_id", "did", "zg_did", "owner", "event_name",
             "zg_eid", "ct",
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 QUERIES["s4_streaming_route"] = _s4
@@ -390,29 +416,23 @@ JOIN event_dict ed ON ed.app_id = e.app_id AND ed.owner = e.owner_e
 def _s5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_zgid_stream, zgid_result
 
-    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s5_")
+    src = _stream_src(spark, sf_dir)
+    stores: list = []  # the three stores' in-run handles, read back below
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q, dev_store, uid_store, bind_store = start_zgid_stream(
+    def start(run: _Run):
+        q, *handles = start_zgid_stream(
             spark,
             source_dir=src,
             schema="event_id BIGINT, app_id BIGINT, did STRING, cuid STRING, seq BIGINT",
-            dev_store_path=os.path.join(work, "dev"),
-            uid_store_path=os.path.join(work, "uid"),
-            bind_store_path=os.path.join(work, "bind"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
+            dev_store_path=run.path("dev"),
+            uid_store_path=run.path("uid"),
+            bind_store_path=run.path("bind"),
+            checkpoint_dir=run.path("ckpt"),
         )
-        _await_done(q)
-        result = zgid_result(dev_store, uid_store, bind_store).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        stores[:] = handles
+        return q
+
+    return _replay(spark, src, "s5", start, lambda run: zgid_result(*stores))
 
 
 QUERIES["s5_streaming_zgid"] = _s5
@@ -447,44 +467,24 @@ ORACLE["s5_streaming_zgid"] = duck_pipeline_sql(
 # the state metric stays bounded.
 # ---------------------------------------------------------------------------
 def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
-    body = (
-        "SELECT app_id, did, seq, md5(CAST(seq AS STRING)) AS uuid FROM gate_ok"
-    )
-
-    def build() -> str:
-        src = _src_dir("zg_s6_src_")
-        base = spark_pipeline_df(spark, sf_dir, body)
-        mid = base.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
-        first_half = base.filter(base.seq <= mid)
+    def parts() -> list[DataFrame]:
+        first, second = _seq_halves(spark_pipeline_df(
+            spark, sf_dir,
+            "SELECT app_id, did, seq, md5(CAST(seq AS STRING)) AS uuid FROM gate_ok",
+        ))
         # batch 1 = first half; batch 2 = second half PLUS a replay of
         # every 5th row of batch 1 (the Kafka re-delivery)
-        _write_split_files(
-            [
-                first_half,
-                base.filter(base.seq > mid).unionByName(
-                    first_half.filter(first_half.seq % 5 == 0)
-                ),
-            ],
-            src,
-        )
-        return src
+        return [first, second.unionByName(first.filter(first.seq % 5 == 0))]
 
-    src = shared(spark, sf_dir, "s6_src", build)
-    name = "s6_mem_" + _uuid.uuid4().hex[:8]
-    work = tempfile.mkdtemp(prefix="zg_s6_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, did STRING, seq BIGINT, uuid STRING"
+    src = _source(spark, sf_dir, "s6_src", parts)
+    return _replay(
+        spark, src, "s6",
+        lambda run: start_replay(
+            replay_source(
+                spark, "app_id BIGINT, did STRING, seq BIGINT, uuid STRING", src
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
             # seq = ct_ms * 1e6 + event_id (operators/domain.py feed), so
             # seq DIV 1e6 recovers the event time the watermark rides on
             .withColumn(
@@ -495,18 +495,11 @@ def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("app_id", "did", "seq", "uuid")
             .writeStream.outputMode("append")
             .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)  # free the driver-held sink rows
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+            .queryName(run.view),
+            run.path("ckpt"),
+        ),
+        lambda run: spark.table(run.view),
+    )
 
 
 QUERIES["s6_streaming_dedup"] = _s6
@@ -529,14 +522,11 @@ ORACLE["s6_streaming_dedup"] = duck_pipeline_sql(
 # boundary into batch-1 click state.
 # ---------------------------------------------------------------------------
 def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from zg_etl_spark.sources.tables import load_table
 
-    def build() -> str:
-        src = _src_dir("zg_s7_src_")
+    def parts() -> list[DataFrame]:
         # engine contract: load_table normalizes events.ts to epoch-NANOS
         # BIGINT (sources/tables.py) — the split key and the source files
         # carry that; the stream derives a TIMESTAMP view for watermarks
@@ -565,18 +555,11 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
               (SELECT c FROM m)) AS cut
             """
         ).first().cut
-        _write_split_files(
-            [base.filter(base.ts <= mid), base.filter(base.ts > mid)], src
-        )
-        return src
+        return [base.filter(base.ts <= mid), base.filter(base.ts > mid)]
 
-    src = shared(spark, sf_dir, "s7_src", build)
-    ev = (
-        spark.readStream.schema(
-            "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    src = _source(spark, sf_dir, "s7_src", parts)
+    ev = replay_source(
+        spark, "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING", src
     )
     # s7's semantics are defined at MICROsecond precision end-to-end
     # (join bounds AND delay from the same truncated micros): the oracle
@@ -616,26 +599,16 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_us - click_us AS delay_us",
     )
 
-    name = "s7_mem_" + _uuid.uuid4().hex[:8]
-    work = tempfile.mkdtemp(prefix="zg_s7_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
+    return _replay(
+        spark, src, "s7",
+        lambda run: start_replay(
             joined.writeStream.outputMode("append")
             .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)  # free the driver-held sink rows
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+            .queryName(run.view),
+            run.path("ckpt"),
+        ),
+        lambda run: spark.table(run.view),
+    )
 
 
 QUERIES["s7_stream_stream_join"] = _s7
@@ -660,82 +633,36 @@ FROM events c JOIN events p
 # must equal the batch dedup relation minus the deleted slice.
 # ---------------------------------------------------------------------------
 def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
+    from zg_etl_spark.plans.pipeline import delete_sign_batches
     from zg_etl_spark.sinks import upsert_table
 
-    def build() -> str:
-        from zg_etl_spark.operators.domain import SPARK
-        from zg_etl_spark.plans.pipeline import b_user_rows_sql
+    src = _source(
+        spark, sf_dir, "s8_src", lambda: delete_sign_batches(spark, sf_dir)[0]
+    )
 
-        src = _src_dir("zg_s8_src_")
-        base = spark_pipeline_df(
-            spark, sf_dir, b_user_rows_sql(SPARK)
-        ).localCheckpoint(eager=True)
-        stats = base.selectExpr(
-            "percentile_approx(seq, 0.5) AS m", "max(seq) AS mx"
-        ).first()
-        live = base.withColumn("_ds", F.lit(False))
-        dels = (
-            base.filter(F.col("zg_id") % 7 == 0)
-            .select("app_id", "device_id", "zg_id")
-            .distinct()
-            .selectExpr(
-                "app_id", "device_id", "zg_id",
-                "CAST(NULL AS BIGINT) AS user_id",
-                "CAST(NULL AS BIGINT) AS begin_date",
-                "CAST(NULL AS INT) AS platform",
-                f"CAST({stats.mx} + 1 AS BIGINT) AS seq",
-                "TRUE AS _ds",
+    def start(run: _Run):
+        def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+            upsert_table(
+                spark, batch_df, run.path("b_user_stream"),
+                keys=["app_id", "device_id", "zg_id"], order_col="seq",
+                partition_cols=["app_id"], delete_col="_ds",
             )
-        )
-        _write_split_files(
-            [
-                live.filter(F.col("seq") <= stats.m),
-                live.filter(F.col("seq") > stats.m).unionByName(dels),
-            ],
+
+        stream = replay_source(
+            spark,
+            "app_id BIGINT, device_id BIGINT, zg_id BIGINT, "
+            "user_id BIGINT, begin_date BIGINT, platform INT, "
+            "seq BIGINT, _ds BOOLEAN",
             src,
         )
-        return src
+        return start_replay(stream.writeStream.foreachBatch(_sink), run.path("ckpt"))
 
-    src = shared(spark, sf_dir, "s8_src", build)
-    work = tempfile.mkdtemp(prefix="zg_s8_")
-    path = os.path.join(work, "b_user_stream")
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_table(
-            spark, batch_df, path,
-            keys=["app_id", "device_id", "zg_id"], order_col="seq",
-            partition_cols=["app_id"], delete_col="_ds",
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, device_id BIGINT, zg_id BIGINT, "
-                "user_id BIGINT, begin_date BIGINT, platform INT, "
-                "seq BIGINT, _ds BOOLEAN"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(path)
-        .select("app_id", "device_id", "zg_id", "user_id",
-                "begin_date", "platform")
-        .localCheckpoint(eager=True)
+    return _replay(
+        spark, src, "s8", start,
+        lambda run: spark.read.parquet(run.path("b_user_stream")).select(
+            "app_id", "device_id", "zg_id", "user_id", "begin_date", "platform"
+        ),
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def _s8_oracle() -> str:
@@ -773,18 +700,20 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.plans.pipeline import _w9_obs_sql
     from zg_etl_spark.sinks import partial_upsert_table
 
-    def build() -> tuple[str, DataFrame]:
-        src = _src_dir("zg_s9_src_")
-        obs = spark_pipeline_df(
+    obs = shared(
+        spark, sf_dir, "s9_obs",
+        lambda: spark_pipeline_df(
             spark, sf_dir, _w9_obs_sql(SPARK)
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True),
+    )
+
+    def parts() -> list[DataFrame]:
         part = (
             obs.filter(F.col("seq") % 2 == 1)
             .select("app_id", "device_id", "language", "timezone",
                     "last_update_date", "seq")
             .withColumn("_ds", F.lit(False))
         )
-        mid = part.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
         dels = (
             obs.filter(F.col("device_id") % 5 == 0)
             .select("app_id", "device_id")
@@ -798,59 +727,45 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "TRUE AS _ds",
             )
         )
-        _write_split_files(
-            [part.filter(part.seq <= mid), part.filter(part.seq > mid), dels],
+        return [*_seq_halves(part), dels]
+
+    src = _source(spark, sf_dir, "s9_src", parts)
+
+    def start(run: _Run):
+        path = run.path("b_device_stream")
+        # seed: the full-column creation write (w9 batch 1)
+        partial_upsert_table(
+            spark, obs.filter(F.col("seq") % 2 == 0), path,
+            keys=["app_id", "device_id"], order_col="seq",
+            update_cols=["device_model", "language", "timezone",
+                         "last_update_date"],
+            partition_cols=["app_id"],
+        )
+
+        def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+            partial_upsert_table(
+                spark, batch_df, path,
+                keys=["app_id", "device_id"], order_col="seq",
+                update_cols=["language", "timezone", "last_update_date"],
+                delete_col="_ds", partition_cols=["app_id"],
+            )
+
+        stream = replay_source(
+            spark,
+            "app_id BIGINT, device_id BIGINT, language STRING, "
+            "timezone STRING, last_update_date BIGINT, seq BIGINT, "
+            "_ds BOOLEAN",
             src,
         )
-        return src, obs
+        return start_replay(stream.writeStream.foreachBatch(_sink), run.path("ckpt"))
 
-    src, obs = shared(spark, sf_dir, "s9_src", build)
-    work = tempfile.mkdtemp(prefix="zg_s9_")
-    path = os.path.join(work, "b_device_stream")
-    # seed: the full-column creation write (w9 batch 1)
-    partial_upsert_table(
-        spark, obs.filter(F.col("seq") % 2 == 0), path,
-        keys=["app_id", "device_id"], order_col="seq",
-        update_cols=["device_model", "language", "timezone",
-                     "last_update_date"],
-        partition_cols=["app_id"],
+    return _replay(
+        spark, src, "s9", start,
+        lambda run: spark.read.parquet(run.path("b_device_stream")).select(
+            "app_id", "device_id", "device_model", "language",
+            "timezone", "last_update_date",
+        ),
     )
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        partial_upsert_table(
-            spark, batch_df, path,
-            keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["language", "timezone", "last_update_date"],
-            delete_col="_ds", partition_cols=["app_id"],
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, device_id BIGINT, language STRING, "
-                "timezone STRING, last_update_date BIGINT, seq BIGINT, "
-                "_ds BOOLEAN"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(path)
-        .select("app_id", "device_id", "device_model", "language",
-                "timezone", "last_update_date")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 QUERIES["s9_stream_partial_upsert"] = _s9
@@ -885,52 +800,45 @@ def _s10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.plans.pipeline import p49_candidates_sql, p49_final_sql
     from zg_etl_spark.streaming.deep_convert import deep_convert_gate
 
-    src = _seq_ordered_source(
+    src = _source(
         spark, sf_dir, "s10_src",
-        "SELECT app_id, lid, event_name, event_type, is_multi, "
-        "CAST(purchase_window AS BIGINT) AS purchase_window, "
-        "CAST(click_window AS BIGINT) AS click_window, "
-        "ct, seq, touch_ct, touch_k "
-        f"FROM ({p49_candidates_sql(SPARK)}) q",
+        lambda: _seq_halves(spark_pipeline_df(
+            spark, sf_dir,
+            "SELECT app_id, lid, event_name, event_type, is_multi, "
+            "CAST(purchase_window AS BIGINT) AS purchase_window, "
+            "CAST(click_window AS BIGINT) AS click_window, "
+            "ct, seq, touch_ct, touch_k "
+            f"FROM ({p49_candidates_sql(SPARK)}) q",
+        )),
     )
-    work = tempfile.mkdtemp(prefix="zg_s10_")
-    store = os.path.join(work, "decisions")
 
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(store)
+    def start(run: _Run):
+        store = run.path("decisions")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, lid BIGINT, event_name STRING, "
-                "event_type STRING, is_multi BOOLEAN, "
-                "purchase_window BIGINT, click_window BIGINT, "
-                "ct BIGINT, seq BIGINT, touch_ct BIGINT, touch_k BIGINT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(store)
+
+        stream = replay_source(
+            spark,
+            "app_id BIGINT, lid BIGINT, event_name STRING, "
+            "event_type STRING, is_multi BOOLEAN, "
+            "purchase_window BIGINT, click_window BIGINT, "
+            "ct BIGINT, seq BIGINT, touch_ct BIGINT, touch_k BIGINT",
+            src,
         )
-        q = (
-            deep_convert_gate(q)
-            .writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return start_replay(
+            deep_convert_gate(stream).writeStream.outputMode("append")
+            .foreachBatch(_sink),
+            run.path("ckpt"),
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    spark.read.parquet(store).createOrReplaceTempView("s10_decisions")
-    result = spark.sql(
-        p49_final_sql(SPARK, "SELECT * FROM s10_decisions")
-    ).localCheckpoint(eager=True)
-    spark.catalog.dropTempView("s10_decisions")
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    return _replay(
+        spark, src, "s10", start,
+        lambda run: spark.sql(
+            p49_final_sql(SPARK, "SELECT * FROM {decisions}"),
+            decisions=spark.read.parquet(run.path("decisions")),
+        ),
+    )
 
 
 QUERIES["s10_streaming_deep_convert"] = _s10

@@ -32,6 +32,31 @@ from pyspark.sql.window import Window
 DEVICE_ID_OFFSET = 100_000  # same namespace as batch did_ids (domain.py)
 
 
+def replay_source(spark: SparkSession, schema: str, source_dir: str) -> DataFrame:
+    """The replay contract every stream reads under: ONE parquet file per
+    micro-batch, taken in modification-time order (the file source's
+    order), with an explicit schema — a subset schema prunes columns at
+    the reader. The batch analog of the reference's ordered Kafka
+    consumption; a Kafka deployment swaps ``format("kafka")`` +
+    ``from_json`` in, nothing else changes."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+    )
+
+
+def start_replay(writer, checkpoint_dir: str):
+    """Start a bounded replay: availableNow processes every file present
+    at start, one micro-batch each, then stops; the checkpoint makes it
+    exactly-once across restarts."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 class MappingStore:
     """Persistent (app_id, key) -> id mapping table, parquet-backed,
     append-only with periodic compaction.
@@ -236,15 +261,12 @@ def start_identity_stream(
     store_path: str,
     output_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ):
     """File-source stream → per-batch identity resolution → parquet sink.
 
-    availableNow + maxFilesPerTrigger gives ordered, bounded micro-batches
-    (the batch analog of the reference's Kafka consumption; a Kafka
-    deployment swaps ``format("kafka")`` + ``from_json`` in, nothing else
-    changes). Exactly-once: checkpoint + idempotent overwrite-by-batch-id
-    output layout.
+    Ordered, bounded micro-batches (``replay_source`` + ``start_replay``).
+    Exactly-once: checkpoint + idempotent overwrite-by-batch-id output
+    layout.
     """
     store = MappingStore(spark, store_path, key_col="did", id_col="zg_did")
 
@@ -254,14 +276,9 @@ def start_identity_stream(
             os.path.join(output_path, f"batch_id={batch_id}")
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_replay(
+        replay_source(spark, schema, source_dir).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
 
 
@@ -283,9 +300,7 @@ def start_event_counts_stream(
     Flink job never had.
     """
     src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+        replay_source(spark, schema, source_dir)
         .withColumn("event_time", F.timestamp_millis(F.col("ct")))
         .withWatermark("event_time", watermark_delay)
     )
@@ -294,13 +309,9 @@ def start_event_counts_stream(
         F.col("app_id"),
         F.col("event_type"),
     ).count()
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_replay(
+        agg.writeStream.outputMode("append").format("memory").queryName(query_name),
+        checkpoint_dir,
     )
 
 
@@ -388,14 +399,9 @@ def start_route_stream(
             os.path.join(output_path, f"batch_id={batch_id}")
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_replay(
+        replay_source(spark, schema, source_dir).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
 
 
@@ -480,14 +486,9 @@ def start_zgid_stream(
                       ex.submit(merge_bind)]:
                 f.result()
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = start_replay(
+        replay_source(spark, schema, source_dir).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
     return q, dev_store, uid_store, bind_store
 
